@@ -11,8 +11,9 @@ mode):
     # or synthesize the deterministic benchmark corpus:
     python -m alligator_spark.cli --synthesize 500x5+500 --workdir /tmp/wd
 
-Prints per-stage row counts, wall time, and docs/sec — the reference
-prints per-table wall time the same way (``alligator/cli.py:41-47``).
+Prints one JSON report line with run totals: docs, components, accepted
+edges, wall time and docs/sec (plus pairwise P/R/F1 with ``--evaluate``) —
+the reference prints per-table wall time (``alligator/cli.py:41-47``).
 """
 
 from __future__ import annotations
@@ -136,7 +137,7 @@ def main(argv: list[str] | None = None) -> int:
     report = {
         "docs": n_docs,
         "components": out["components"].select("component_id").distinct().count(),
-        "accepted_edges": out["final_edges"].filter("accepted").count(),
+        "accepted_edges": out["accepted_edges"].filter("accepted").count(),
         "wall_sec": round(wall, 2),
         "docs_per_sec": round(n_docs / wall, 1),
         "workdir": args.workdir,

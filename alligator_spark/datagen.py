@@ -159,7 +159,8 @@ def _doc_spans(spec: CorpusSpec, i: int) -> list[dict]:
         media = prof["media"]
     else:
         # distractor: near-miss on a base entity's name, own attributes
-        j = int(rng.integers(0, spec.n_entities))
+        # (entity 0's profile exists even in a distractor-only corpus)
+        j = int(rng.integers(0, max(spec.n_entities, 1)))
         prof = _entity_profile(spec, j)
         toks = list(prof["name_tokens"])
         # replace all but one token -> shares a token (may co-block) but

@@ -132,15 +132,6 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return attach.unionAll(root).distinct()
 
 
-def _fingerprint(edges: DataFrame) -> tuple[int, int]:
-    row = edges.agg(
-        F.count("*").alias("n"),
-        # bit_xor: order-insensitive, overflow-free (ANSI-safe) set digest
-        F.coalesce(F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"])
-
-
 # Structural fixed-point probe. The alternating iteration has converged
 # exactly when the edge set is a star forest rooted at component minima,
 # which (given the rounds' dst<src output invariant) holds iff

@@ -3,17 +3,23 @@ reference's 4-stage coordinator (``alligator/coordinator.py:51-93``).
 
   normalize -> block_keys -> candidate_edges -> scored_edges -> components
 
-Each stage commits a checkpoint table with per-partition lineage; a rerun
-with the same workdir skips committed stages (resume semantics of the
-reference's status flags). The final clusters table re-joins components
-onto the INTACT input docs — the ``spans`` column flows through from the
-scan untouched (span-sequence invariant, SURVEY §1.2).
+One stage list, two materializers. The dataflow is the ordered ``_STEPS``
+map of ``name -> build`` steps; a build reads its inputs through a lookup
+that builds each on first use, and every step passes through exactly one
+``materialize(name, build)`` call. :func:`run_linkage` materializes inline
+(persist / localCheckpoint at stage boundaries). :func:`run_pipeline`
+commits each ``STAGES`` table with per-partition lineage and on resume
+reads a committed table instead of building it (the reference's status
+flags) — a resume from ``scored_edges`` never runs normalize, MinHash or
+the battery. Clusters re-join components onto the INTACT input docs: the
+``spans`` column flows through untouched (span invariant, SURVEY §1.2).
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
+import time
 from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,16 +35,16 @@ from alligator_spark.operators.clustering import components_from_strong
 from alligator_spark.operators.cta import cpa_winners, cta_winners
 from alligator_spark.operators.normalize import normalize_docs
 from alligator_spark.operators.output import cea_topk
-from alligator_spark.operators.rerank import mention_token_keys
 from alligator_spark.operators.pairs import (
     PairConfig,
     candidate_pairs,
     exact_mention_pairs,
 )
 from alligator_spark.operators.rerank import RerankConfig, rerank_edges
+from alligator_spark.operators.rerank import mention_token_keys
 from alligator_spark.operators.scoring import (
     ScoringConfig,
-    accept_edges,
+    accepted_edge_keys,
     score_pairs,
     strong_components,
 )
@@ -59,16 +65,171 @@ class PipelineConfig:
         return hashlib.sha256(blob.encode()).hexdigest()[:16]
 
 
-STAGES = [
-    "normalized",
-    "block_keys",
-    "candidate_edges",
-    "scored_edges",  # ALWAYS the raw rank-stage output (fixed semantics)
-    "reranked_edges",  # rerank output pre-accept (only when cfg.rerank.enabled)
-    "strong_components",  # CC over strong edges (feeds accept + final CC)
-    "accepted_edges",  # match decision applied (both paths)
-    "components",
-]
+class _Lookup(dict):
+    """Step outputs of one run, each built and materialized on first
+    lookup; ``name in lookup`` tests without building."""
+
+    def __init__(self, docs: DataFrame, cfg: PipelineConfig, materialize, cc_stats):
+        super().__init__()
+        self.docs, self.cfg, self.cc_stats = docs, cfg, cc_stats
+        self._materialize = materialize
+
+    def __missing__(self, name: str) -> DataFrame:
+        build = _STEPS[name]
+        self[name] = self._materialize(name, lambda: build(self))
+        return self[name]
+
+    def ranked(self) -> DataFrame:
+        """The rank table the match decision reads."""
+        return self["reranked_edges" if self.cfg.rerank.enabled else "scored_edges"]
+
+
+def _candidate_edges(s: _Lookup) -> DataFrame:
+    # exact-duplicate star edges: recall guarantee block caps can't break
+    base, normalized = s["base_pairs"], s["normalized"]
+    ex = exact_mention_pairs(normalized)
+    pairs = base.unionByName(
+        ex.join(base.select("doc_a", "doc_b"), ["doc_a", "doc_b"], "left_anti")
+    )
+    if s.cfg.blocking.fuzzy_enabled:
+        pairs = pairs.unionByName(
+            fuzzy_rescue_pairs(normalized, pairs, s.cfg.blocking, sigs=s["sigs"])
+        )
+    return pairs
+
+
+def _scored_edges(s: _Lookup) -> DataFrame:
+    # the base pair count sizes the battery's spread (the exact/fuzzy
+    # additions are a few percent — only the order of magnitude matters);
+    # a resume that read candidate_edges has no base pairs and runs unsized
+    # rather than rebuild them
+    hint = s["base_pairs"].count() if "base_pairs" in s else None
+    return score_pairs(s["candidate_edges"], s["normalized"], n_pairs_hint=hint)
+
+
+# Strong-edge components are computed ONCE and reused twice: the accept
+# stage's transitive gap rule (same-cluster runner-ups don't compete) and
+# the final clustering, which only contracts the few borderline-accepted
+# edges on top. The accept decision is the narrow key table: clustering
+# contracts keys, and the wide rows join back lazily for CEA/CPA only.
+_STEPS = {
+    "normalized": lambda s: normalize_docs(s.docs),
+    # one MinHash pass, shared by strict blocking AND the fuzzy retry
+    "sigs": lambda s: minhash_signatures(s["normalized"], s.cfg.blocking),
+    "block_keys": lambda s: block_keys(s["normalized"], s.cfg.blocking, sigs=s["sigs"]),
+    "base_pairs": lambda s: candidate_pairs(
+        s["block_keys"], s.cfg.pairs, sigs=s["sigs"]
+    )[0],
+    "candidate_edges": _candidate_edges,
+    # ALWAYS the raw rank-stage output (fixed semantics in both paths)
+    "scored_edges": _scored_edges,
+    # rerank output pre-accept (only when cfg.rerank.enabled)
+    "reranked_edges": lambda s: rerank_edges(
+        s["scored_edges"], s["normalized"], s.cfg.rerank
+    ),
+    "strong_components": lambda s: strong_components(s.ranked(), s.cfg.scoring),
+    "accepted_edges": lambda s: accepted_edge_keys(
+        s.ranked(), s.cfg.scoring, strong_comps=s["strong_components"]
+    ),
+    "components": lambda s: components_from_strong(
+        s["strong_components"],
+        # the filter also reads a wide accept table committed before
+        # accepted_edges became the narrow key table
+        s["accepted_edges"].filter("accepted").select("doc_a", "doc_b"),
+        all_nodes=s["normalized"].select("doc_id"),
+        stats=s.cc_stats,
+    ),
+}
+# per-run intermediates: shared by several stages, never committed
+_TRANSIENT = ("sigs", "base_pairs")
+STAGES = [name for name in _STEPS if name not in _TRANSIENT]
+
+# Inline materialization. persist + EAGER count on the two shared per-doc
+# tables: block_keys, candidate_pairs' sig ranking, the exact star,
+# featurize and rerank all fan out from them as CONCURRENT AQE stage jobs,
+# and a lazy persist lets every branch recompute the pandas subtree before
+# the cache exists (cache stampede). Build each cache once, in order.
+# block_keys and the post-union candidate_edges stay unmaterialized: the
+# keys subtree is cheap JVM explodes over the two caches (an eager cache
+# build would serialize a full extra pass — measured slower at sf0.1), and
+# the union is read once, by the battery.
+_PERSIST = ("normalized", "sigs")
+# Stage boundaries use localCheckpoint (materialize + TRUNCATE the logical
+# plan), not bare persist: the rerank/accept stages reference their input
+# subtree many times, and with lazy persists the logical tree grows
+# combinatorially — Catalyst then re-analyzes a huge plan for every action
+# (measured: 75 s accept / 131 s CC at sf0.1 with persists vs ~3 s
+# truncated). The parquet stage tables of run_pipeline truncate the same
+# way. base_pairs materializes BEFORE the exact-star union: the left_anti
+# probe and the union both read it (un-materialized that runs the pair
+# self-join twice). The accept keys checkpoint lazily: the CC probe is the
+# action that materializes them.
+_CHECKPOINT_EAGER = {
+    "base_pairs": True,
+    "scored_edges": True,
+    "reranked_edges": True,
+    "strong_components": True,
+    "accepted_edges": False,
+}
+
+
+def _inline(stage_times: dict | None):
+    def materialize(name: str, build) -> DataFrame:
+        t0 = time.monotonic()
+        df = build()
+        if name in _PERSIST:
+            df = df.persist()
+            df.count()
+        elif name in _CHECKPOINT_EAGER:
+            df = df.localCheckpoint(eager=_CHECKPOINT_EAGER[name])
+        if stage_times is not None:
+            stage_times[name] = round(time.monotonic() - t0, 2)
+        return df
+
+    return materialize
+
+
+def _resumable(ckpt: CheckpointManager, resume: bool):
+    inline = _inline(None)
+
+    def materialize(name: str, build) -> DataFrame:
+        if name in _TRANSIENT:
+            return inline(name, build)
+        if resume and ckpt.committed(name):
+            return ckpt.read(name)
+        return ckpt.commit(build(), name)
+
+    return materialize
+
+
+def _link(docs, cfg, materialize, names, cc_stats=None) -> dict[str, DataFrame]:
+    """Materialize ``names`` in order, then build the lazy output tail."""
+    s = _Lookup(docs, cfg, materialize, cc_stats)
+    for name in names:
+        if name != "reranked_edges" or cfg.rerank.enabled:
+            s[name]
+    out = {name: s[name] for name in STAGES if name in s}
+    # final_edges: the wide view, every ranked row plus the accepted flag
+    ranked, components = s.ranked(), s["components"]
+    accepted = ranked.join(
+        s["accepted_edges"].select("doc_a", "doc_b", "accepted"),
+        ["doc_a", "doc_b"],
+        "left",
+    ).withColumn("accepted", F.coalesce("accepted", F.lit(False)))
+    out["final_edges"] = accepted
+    # final output: clusters joined back onto intact docs (spans untouched)
+    out["clusters"] = docs.join(components, "doc_id", "left").select(
+        "doc_id",
+        F.coalesce("component_id", "doc_id").alias("component_id"),
+        "spans",
+    )
+    # CEA-analogue: intact docs + top-5 ranked candidates (lazy)
+    out["cea"] = cea_topk(accepted, docs)
+    # CTA/CPA-analogue final outputs (reference ml.py:237-269): per
+    # component the argmax-count mention tokens / literal kinds (lazy)
+    out["cta"] = cta_winners(components, mention_token_keys(s["normalized"]))
+    out["cpa"] = cpa_winners(components, accepted.filter("accepted"))
+    return out
 
 
 def run_linkage(
@@ -77,138 +238,18 @@ def run_linkage(
     cfg: PipelineConfig | None = None,
     stage_times: dict | None = None,
 ) -> dict[str, DataFrame]:
-    """Uncheckpointed composition of all five stages (for tests/benchmarks
-    and embedding in other plans); same dataflow as run_pipeline.
+    """Uncheckpointed run of the stage list (for tests/benchmarks and
+    embedding in other plans).
 
-    Reused intermediates are materialized with localCheckpoint — both to
-    avoid re-running the pandas-UDF battery per consuming branch AND to
-    truncate the logical plan at stage boundaries (see the comment at the
-    checkpoint sites; the checkpointed run_pipeline gets the same effect
-    from its parquet stage tables).
-
-    ``stage_times`` (optional) records wall seconds of each eager stage
-    materialization plus the CC driver-loop telemetry — the measurement
-    feed for the scaling-efficiency work (BENCH_SCALING.md).
+    ``stage_times`` (optional) records wall seconds per step, keyed by step
+    name, plus the CC driver-loop telemetry under ``"cc"`` — the
+    measurement feed for the scaling-efficiency work (BENCH_SCALING.md).
     """
-    import time as _time
-
-    def timed(name: str, df: DataFrame) -> DataFrame:
-        if stage_times is None:
-            return df.localCheckpoint(eager=True)
-        t0 = _time.monotonic()
-        out = df.localCheckpoint(eager=True)
-        stage_times[name] = round(_time.monotonic() - t0, 2)
-        return out
-
     cfg = cfg or PipelineConfig()
-    # persist + EAGER count on the two shared per-doc tables: block_keys,
-    # candidate_pairs' sig ranking, the exact star, featurize and rerank
-    # all fan out from them as CONCURRENT AQE stage jobs, and a lazy
-    # persist lets every branch recompute the pandas subtree before the
-    # cache exists (cache stampede). Build each cache once, in order.
-    normalized = normalize_docs(docs).persist()
-    normalized.count()
-    # one MinHash pass, shared by strict blocking AND the fuzzy retry
-    sigs = minhash_signatures(normalized, cfg.blocking).persist()
-    sigs.count()
-    # keys stays UNPERSISTED deliberately: candidate_pairs reads it twice
-    # (stats aggregate + stats join) but the subtree is cheap JVM explodes
-    # over the two caches above — the concurrent duplicate execution
-    # overlaps in wall time, while an eager cache build would serialize a
-    # full extra pass (measured slower at sf0.1). Eager persists are for
-    # EXPENSIVE (Python-pass) subtrees only.
-    keys = block_keys(normalized, cfg.blocking, sigs=sigs)
-    pairs, _ = candidate_pairs(keys, cfg.pairs, sigs=sigs)
-    # Stage boundaries use localCheckpoint (materialize + TRUNCATE the
-    # logical plan), not bare persist: the rerank/accept stages reference
-    # their input subtree many times, and with lazy persists the logical
-    # tree grows combinatorially — Catalyst then re-analyzes a huge plan
-    # for every action and driver-side planning, not execution, dominates
-    # (measured: 75 s accept / 131 s CC at sf0.1 with persists vs ~3 s
-    # truncated). run_pipeline gets the same truncation from its parquet
-    # stage tables.
-    #
-    # Materialize BEFORE the exact-star union: the left_anti probe and
-    # the union both read the candidate_pairs subtree, and un-materialized
-    # that runs the whole self-join twice (measured ~4s of the sf0.1 pair
-    # stage; scale-neutral waste at 600k docs too).
-    pairs = timed("pairs_ckpt", pairs)
-    # counting the checkpointed pair table is one cheap job over
-    # materialized partitions; it sizes the scoring battery's spread
-    # (exact/fuzzy additions below are a few percent — the sizing only
-    # needs the order of magnitude)
-    n_pairs = pairs.count()
-    # exact-duplicate star edges: recall guarantee block caps can't break
-    ex = exact_mention_pairs(normalized)
-    pairs = pairs.unionByName(
-        ex.join(pairs.select("doc_a", "doc_b"), ["doc_a", "doc_b"], "left_anti")
-    )
-    if cfg.blocking.fuzzy_enabled:
-        pairs = pairs.unionByName(
-            fuzzy_rescue_pairs(normalized, pairs, cfg.blocking, sigs=sigs)
-        )
-    rank_raw = timed(
-        "score_ckpt", score_pairs(pairs, normalized, n_pairs_hint=n_pairs)
-    )
-    ranked = rank_raw
-    if cfg.rerank.enabled:
-        # M3: global-frequency rerank between rank and the match decision
-        ranked = timed("rerank_ckpt", rerank_edges(ranked, normalized, cfg.rerank))
-    # Strong-edge components are computed ONCE and reused twice: the
-    # accept stage's transitive gap rule (same-cluster runner-ups don't
-    # compete) and the final clustering, which only contracts the few
-    # borderline-accepted edges on top — total CC cost stays ~flat vs
-    # the old single full-graph CC.
-    t_cc = _time.monotonic()
-    sc = strong_components(ranked, cfg.scoring).localCheckpoint(eager=True)
+    cc_stats = None
     if stage_times is not None:
-        stage_times["strong_cc"] = round(_time.monotonic() - t_cc, 2)
-    # Accept decision once, as a narrow key table (lazy checkpoint: the
-    # CC probe below is the action that materializes it, truncating the
-    # window machinery out of every later plan). The clustering path
-    # contracts KEYS — joining the decision back onto the wide rerank
-    # rows (accept_edges) is built lazily for the CEA/CPA consumers only,
-    # so the wide feature rows never ride the accept shuffle here.
-    from alligator_spark.operators.scoring import accepted_edge_keys
-
-    akeys = accepted_edge_keys(
-        ranked, cfg.scoring, strong_comps=sc
-    ).localCheckpoint(eager=False)
-    scored = ranked.join(akeys, ["doc_a", "doc_b"], "left").withColumn(
-        "accepted", F.coalesce("accepted", F.lit(False))
-    )
-    cc_stats: dict | None = {} if stage_times is not None else None
-    t_cc = _time.monotonic()
-    components = components_from_strong(
-        sc,
-        akeys.select("doc_a", "doc_b"),
-        all_nodes=normalized.select("doc_id"),
-        stats=cc_stats,
-    )
-    if stage_times is not None:
-        stage_times["cc_build"] = round(_time.monotonic() - t_cc, 2)
-        stage_times["cc"] = cc_stats
-    clusters = docs.join(components, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce("component_id", "doc_id").alias("component_id"),
-        "spans",
-    )
-    return {
-        "normalized": normalized,
-        "block_keys": keys,
-        "candidate_edges": pairs,
-        "scored_edges": rank_raw,  # raw rank output (same contract as run_pipeline)
-        "accepted_edges": scored,
-        "final_edges": scored,  # accepted edge table (post-rerank when enabled)
-        "components": components,
-        "clusters": clusters,
-        # CEA-analogue: intact docs + top-5 ranked candidates (lazy)
-        "cea": cea_topk(scored, docs),
-        # CTA/CPA-analogue final outputs (reference ml.py:237-269): per
-        # component the argmax-count mention tokens / literal kinds (lazy)
-        "cta": cta_winners(components, mention_token_keys(normalized)),
-        "cpa": cpa_winners(components, scored.filter("accepted")),
-    }
+        cc_stats = stage_times["cc"] = {}
+    return _link(docs, cfg, _inline(stage_times), list(_STEPS), cc_stats)
 
 
 def run_pipeline(
@@ -218,73 +259,8 @@ def run_pipeline(
     cfg: PipelineConfig | None = None,
     resume: bool = True,
 ) -> dict[str, DataFrame]:
-    """Run (or resume) the full pipeline; returns all stage DataFrames."""
+    """Run (or resume) the full pipeline, committing every stage under
+    ``workdir``; returns all stage DataFrames plus the output tables."""
     cfg = cfg or PipelineConfig()
     ckpt = CheckpointManager(spark, workdir, cfg.run_id())
-    out: dict[str, DataFrame] = {}
-
-    def stage(name: str, build):
-        if resume and ckpt.committed(name):
-            out[name] = ckpt.read(name)
-        else:
-            out[name] = ckpt.commit(build(), name)
-        return out[name]
-
-    normalized = stage("normalized", lambda: normalize_docs(docs))
-    # lazy: only materializes when block_keys/candidate_edges must (re)build
-    sigs = minhash_signatures(normalized, cfg.blocking).persist()
-    keys = stage("block_keys", lambda: block_keys(normalized, cfg.blocking, sigs=sigs))
-
-    def build_pairs():
-        base, _ = candidate_pairs(keys, cfg.pairs, sigs=sigs)
-        # materialize once: the exact-star left_anti probe and the union
-        # (and the fuzzy rescue probe) all re-read this subtree
-        base = base.localCheckpoint(eager=True)
-        ex = exact_mention_pairs(normalized)
-        base = base.unionByName(
-            ex.join(base.select("doc_a", "doc_b"), ["doc_a", "doc_b"], "left_anti")
-        )
-        if not cfg.blocking.fuzzy_enabled:
-            return base
-        return base.unionByName(
-            fuzzy_rescue_pairs(normalized, base, cfg.blocking, sigs=sigs)
-        )
-
-    pairs = stage("candidate_edges", build_pairs)
-    # "scored_edges" has FIXED semantics in both paths (the raw rank-stage
-    # output) and acceptance commits as its own stage — a consumer written
-    # against one config never reads a semantically different table under
-    # the same name (the run_id-keyed paths additionally firewall resumes
-    # across config changes).
-    ranked = stage("scored_edges", lambda: score_pairs(pairs, normalized))
-    if cfg.rerank.enabled:
-        ranked = stage(
-            "reranked_edges", lambda: rerank_edges(ranked, normalized, cfg.rerank)
-        )
-    sc = stage(
-        "strong_components", lambda: strong_components(ranked, cfg.scoring)
-    )
-    scored = stage(
-        "accepted_edges",
-        lambda: accept_edges(ranked, cfg.scoring, strong_comps=sc),
-    )
-    components = stage(
-        "components",
-        lambda: components_from_strong(
-            sc,
-            scored.filter("accepted").select("doc_a", "doc_b"),
-            all_nodes=normalized.select("doc_id"),
-        ),
-    )
-
-    out["final_edges"] = scored  # accepted edge table (post-rerank when enabled)
-    out["cea"] = cea_topk(scored, docs)  # lazy; reads the committed stage
-    out["cta"] = cta_winners(components, mention_token_keys(normalized))
-    out["cpa"] = cpa_winners(components, scored.filter("accepted"))
-    # final output: clusters joined back onto intact docs (spans untouched)
-    out["clusters"] = docs.join(components, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce("component_id", "doc_id").alias("component_id"),
-        "spans",
-    )
-    return out
+    return _link(docs, cfg, _resumable(ckpt, resume), STAGES)

@@ -25,6 +25,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 LINEAGE_COLS = ["stage", "partition_id", "input_count", "edge_count", "wall_ms", "run_id"]
+LINEAGE_SCHEMA = (
+    "partition_id int, input_count long, edge_count long, wall_ms long, "
+    "run_id string, stage string"
+)
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -54,7 +58,9 @@ class CheckpointManager:
 
     ``backend`` is "iceberg" when the runtime jar is present (stage tables
     become catalog tables ``<namespace>.<stage>``) else "parquet".
-    Lineage rows always append to a Parquet table under the workdir.
+    Lineage rows always go to a Parquet table under the workdir, one
+    ``run_id=<id>/stage=<name>`` partition per committed stage: a re-commit
+    replaces its partition, so reruns never duplicate lineage rows.
     """
 
     def __init__(
@@ -161,16 +167,18 @@ class CheckpointManager:
                 F.count("*").alias("input_count"),
                 edge_count.alias("edge_count"),
             )
-            .select(
-                F.lit(stage).alias("stage"),
-                "partition_id",
-                "input_count",
-                "edge_count",
-                F.lit(wall_ms).alias("wall_ms"),
-                F.lit(self.run_id).alias("run_id"),
-            )
+            .withColumn("wall_ms", F.lit(wall_ms).cast("long"))
         )
-        lineage.write.mode("append").parquet(f"{self.workdir}/_lineage")
+        # overwrite: the path holds exactly this (run_id, stage)'s rows
+        lineage.write.mode("overwrite").parquet(
+            f"{self.workdir}/_lineage/run_id={self.run_id}/stage={stage}"
+        )
 
     def lineage(self) -> DataFrame:
-        return self.spark.read.parquet(f"{self.workdir}/_lineage")
+        # explicit schema: partition values are strings (a hex run_id such
+        # as "1e10..." would otherwise be inferred as a number)
+        return (
+            self.spark.read.schema(LINEAGE_SCHEMA)
+            .parquet(f"{self.workdir}/_lineage")
+            .select(*LINEAGE_COLS)
+        )

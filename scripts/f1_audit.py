@@ -55,7 +55,7 @@ def main() -> None:
         cb = comp.select(
             F.col("doc_id").alias("doc_b"), F.col("component_id").alias("comp_b")
         )
-        acc = out["accepted_edges"].select(
+        acc = out["final_edges"].select(
             "doc_a", "doc_b", F.col("score").alias("edge_score"), "accepted"
         ).dropDuplicates(["doc_a", "doc_b"])
         cand = out["candidate_edges"].select("doc_a", "doc_b").withColumn(

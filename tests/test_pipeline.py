@@ -13,7 +13,14 @@ from pyspark.sql import functions as F
 
 from alligator_spark.datagen import CorpusSpec, generate_docs, gold_clusters
 from alligator_spark.eval import labeled_pairs, pairwise_prf
-from alligator_spark.plans.pipeline import PipelineConfig, run_pipeline
+from alligator_spark.operators.rerank import RerankConfig
+from alligator_spark.plans.pipeline import (
+    STAGES,
+    PipelineConfig,
+    run_linkage,
+    run_pipeline,
+)
+from alligator_spark.sources.tables import CheckpointManager
 
 
 @pytest.fixture(scope="module")
@@ -163,6 +170,109 @@ class TestResume:
             "wall_ms",
             "run_id",
         }
+
+    def test_rerun_replaces_lineage_rows(self, spark, tmp_path):
+        # a resume=False rerun re-commits every stage: its lineage must
+        # replace the first run's rows, not append a second set
+        docs = generate_docs(spark, CorpusSpec(5, 2, 5))
+        wd = str(tmp_path / "wd")
+        for _ in range(2):
+            run_pipeline(spark, docs, wd, resume=False)
+        ckpt = CheckpointManager(spark, wd, PipelineConfig().run_id())
+        lineage = ckpt.lineage()
+        keys = lineage.select("run_id", "stage", "partition_id")
+        assert keys.count() == keys.distinct().count()
+        logged = {
+            r["stage"]: r["n"]
+            for r in lineage.groupBy("stage").agg(F.sum("input_count").alias("n")).collect()
+        }
+        sizes = {stage: ckpt.read(stage).count() for stage in STAGES}
+        # empty stage tables log no partitions
+        assert logged == {stage: n for stage, n in sizes.items() if n}
+        assert {"normalized", "scored_edges", "components"} <= set(logged)
+
+
+def _linkage_result(out):
+    """Component map and accepted key set of one run."""
+    comps = sorted(map(tuple, out["components"].select("doc_id", "component_id").collect()))
+    accepted = sorted(
+        map(tuple, out["accepted_edges"].filter("accepted").select("doc_a", "doc_b").collect())
+    )
+    return comps, accepted
+
+
+class TestOneDataflow:
+    """run_linkage and run_pipeline materialize one stage list; they must
+    agree on every result, fresh or resumed."""
+
+    @pytest.mark.parametrize("rerank", [True, False], ids=["rerank", "no_rerank"])
+    def test_inline_fresh_and_resumed_agree(self, spark, smoke_docs, tmp_path, rerank):
+        cfg = PipelineConfig(rerank=RerankConfig(enabled=rerank))
+        inline = _linkage_result(run_linkage(spark, smoke_docs, cfg))
+        wd = str(tmp_path / "wd")
+        fresh = _linkage_result(run_pipeline(spark, smoke_docs, wd, cfg))
+        ckpt = CheckpointManager(spark, wd, cfg.run_id())
+        for stage in STAGES[STAGES.index("scored_edges"):]:
+            shutil.rmtree(ckpt.path(stage), ignore_errors=True)
+        resumed = _linkage_result(run_pipeline(spark, smoke_docs, wd, cfg))
+        assert inline[1], "smoke corpus must accept some edges"
+        assert inline == fresh == resumed
+
+    def test_resume_never_rebuilds_committed_inputs(
+        self, spark, smoke_docs, tmp_path, monkeypatch
+    ):
+        # a resume from committed scored_edges reads it: normalize, MinHash
+        # and the battery must not run again
+        import alligator_spark.plans.pipeline as PL
+
+        wd = str(tmp_path / "wd")
+        before = _linkage_result(run_pipeline(spark, smoke_docs, wd))
+        ckpt = CheckpointManager(spark, wd, PipelineConfig().run_id())
+        for stage in STAGES[STAGES.index("reranked_edges"):]:
+            shutil.rmtree(ckpt.path(stage))
+
+        def fail(*a, **k):
+            raise AssertionError("rebuilt a committed input")
+
+        for name in ("normalize_docs", "minhash_signatures", "score_pairs"):
+            monkeypatch.setattr(PL, name, fail)
+        assert _linkage_result(run_pipeline(spark, smoke_docs, wd)) == before
+
+    def test_reads_wide_accept_table_of_older_workdirs(self, spark, smoke_docs, tmp_path):
+        # accepted_edges used to be committed as the wide accept_edges
+        # table (every ranked row + accepted flag); a workdir written that
+        # way must still resume to the same components
+        from alligator_spark.operators.scoring import accept_edges
+
+        wd = str(tmp_path / "wd")
+        cfg = PipelineConfig()
+        out = run_pipeline(spark, smoke_docs, wd, cfg)
+        before = _linkage_result(out)
+        ckpt = CheckpointManager(spark, wd, cfg.run_id())
+        wide = accept_edges(out["reranked_edges"], cfg.scoring, out["strong_components"])
+        ckpt.commit(wide, "accepted_edges")
+        shutil.rmtree(ckpt.path("components"))
+        assert _linkage_result(run_pipeline(spark, smoke_docs, wd, cfg)) == before
+
+    @pytest.mark.parametrize(
+        "spec",
+        [CorpusSpec(0, 0, 0), CorpusSpec(0, 0, 30)],
+        ids=["empty", "all_singletons"],
+    )
+    def test_edge_corpora_through_both_entry_points(self, spark, tmp_path, spec):
+        docs = generate_docs(spark, spec).cache()
+        runs = {
+            "inline": run_linkage(spark, docs),
+            "resumable": run_pipeline(spark, docs, str(tmp_path / "wd")),
+        }
+        for name, out in runs.items():
+            rows = out["clusters"].collect()
+            assert len(rows) == spec.n_docs, name
+            # every doc is its own component
+            assert all(r["component_id"] == r["doc_id"] for r in rows), name
+            assert out["components"].count() == spec.n_docs, name
+            # spans kept exactly
+            assert docs.exceptAll(out["clusters"].select("doc_id", "spans")).count() == 0, name
 
 
 class TestClustering:
